@@ -53,6 +53,13 @@ import org.apache.spark.sql.SparkSession
   * best-of milliseconds sorted by query name, "order":"name_asc")
   * prints LAST on both streams so the driver's truncated capture
   * contains one complete parseable JSON object covering every query.
+  *
+  * Honest failures: a run that throws gives no time sample (a query
+  * that breaks fast must never read as a speed-up). The failure prints
+  * as "[bench] <name> failed: ..." on stderr, the full line and
+  * bench_out.json list every query with a failed run under "failed", a
+  * query with no successful run shows -1 in its compact "qv" slot, and
+  * the process exits 1 if any query failed.
   */
 object Bench {
   /** (1-min, 5-min, 15-min) load averages. /proc/loadavg on Linux;
@@ -107,6 +114,31 @@ object Bench {
     math.max(0.0, load1m - self)
   }
 
+  /** Seconds `body` took, or what it threw: a failed run gives no time
+    * sample. */
+  private[graft] def timed(body: => Unit): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    try { body; Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(e) }
+  }
+
+  /** Per-query best-of-N over the runs in which the query succeeded, in
+    * `names` order (None: no successful run), and every query with at
+    * least one failed run. */
+  private[graft] def summarize(names: Seq[String],
+                               runs: Seq[Map[String, Either[Throwable, Double]]])
+      : (Seq[(String, Option[Double])], Seq[String]) = {
+    val best = names.map { n =>
+      n -> runs.flatMap(_(n).toOption).minOption
+    }
+    (best, names.filter(n => runs.exists(_(n).isLeft)))
+  }
+
+  /** The compact line's "qv": best-of milliseconds by query name
+    * ascending, -1 for a query with no successful run. */
+  private[graft] def compactQv(best: Seq[(String, Option[Double])]): Seq[Long] =
+    best.sortBy(_._1).map(_._2.fold(-1L)(v => math.round(v * 1000)))
+
   def main(args: Array[String]): Unit = {
     val wall0 = System.nanoTime()
     val loadStart = loadAvg()
@@ -160,18 +192,17 @@ object Bench {
     // for the WARM dir; later runs filled them for sfDir) and releases
     // each family after its last consumer — bounds storage residency and
     // makes run 1 and run N time the same work (see tools.SweepCaches).
-    def sweep(): Map[String, Double] = {
+    def sweep(): Map[String, Either[Throwable, Double]] = {
       graft.tools.SweepCaches.releaseAll()
       val caches = new graft.tools.SweepCaches.Tracker
       queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
+        val r = timed(fn(spark, sfDir).count())
+        r.left.foreach(e => System.err.println(s"[bench] $name failed: $e"))
         caches.done(name)
-        name -> dt
+        name -> r
       }.toMap
     }
-    val runBuf = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
+    val runBuf = scala.collection.mutable.ArrayBuffer.empty[Map[String, Either[Throwable, Double]]]
     var targetRuns = nRuns0
     var runsAuto = auto0
     var ambientRun1 = -1.0
@@ -190,20 +221,20 @@ object Bench {
         }
       }
     }
-    val runs: Seq[Map[String, Double]] = runBuf.toSeq
+    val runs = runBuf.toSeq
     val nRuns = runs.size
     // Best-of-N per query (order of the queries map preserved for output)
-    val results = queries.map { case (name, _) =>
-      name -> runs.map(_(name)).min
-    }
+    val (best, failed) = summarize(queries.map(_._1), runs)
+    val results = best.collect { case (name, Some(v)) => name -> v }
     val loadEnd = loadAvg()
     val wallSec = (System.nanoTime() - wall0) / 1e9
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val runTotals = runs.map(_.values.sum).mkString("[", ",", "]")
+    val total = results.map(_._2).sum
+    val runTotals = runs.map(_.values.flatMap(_.toOption).sum).mkString("[", ",", "]")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"""" +
         s""","runs":$nRuns,"runs_auto":$runsAuto,"ambient_run1":$ambientRun1""" +
       s""","run_totals":$runTotals,"wall_sec":$wallSec""" +
         s""","load_start":${loadJson(loadStart)},"load_timed":${loadJson(loadTimed)}""" +
@@ -233,8 +264,7 @@ object Bench {
     // line (no trailing "[success]") — the two defects that kept
     // BENCH_r19.json's `parsed` null even though the line survived
     // the tail capture.
-    val qvSorted = results.sortBy(_._1)
-      .map { case (_, v) => math.round(v * 1000) }
+    val qvSorted = compactQv(best)
     val compact =
       s"""{"metric":"total","value":${math.round(total * 1000) / 1000.0}""" +
         s""","unit":"sec","sf":"$sfDir","n":${qvSorted.size}""" +
@@ -243,5 +273,6 @@ object Bench {
         s""","load_timed":${loadJson(loadTimed)},"cpus":$cpus}"""
     println(compact)
     System.err.println(compact)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,6 +1,10 @@
 package graft.io
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Catalog of the driver-generated testdata tables (TESTDATA.md).
   *
@@ -11,6 +15,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * directory/glob of files and replication is the storage layer's job, so
   * `put/get/ls/store` (sdfs/src/main.rs:237-251) collapse into
   * `spark.read` / `df.write` / catalog listings, which this object fronts.
+  *
+  * Each table's parquet schema is resolved once per session (see
+  * [[Tables.schemaOf]]): a read with no schema makes Spark infer it
+  * with a one-task job, which on short queries was most of their
+  * dispatch. New batch reads of these tables go through here.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   // Idempotent: every batch operator reaches its session through a
@@ -19,8 +28,7 @@ final case class Tables(spark: SparkSession, dir: String) {
   // session through every call site.
   graft.functions.GraftFunctions.register(spark)
 
-  private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
 
   /** Widen a narrow scan to the session's parallelism ONLY when the
     * source yielded fewer splits. The testdata tables are single small
@@ -72,6 +80,52 @@ final case class Tables(spark: SparkSession, dir: String) {
   lazy val events: DataFrame = withNanosTs(t("events"))
   lazy val documents: DataFrame = t("documents")
   lazy val embeddings: DataFrame = t("embeddings")
+}
+
+object Tables {
+  /** Files under a path as (name, length, modification time), with the
+    * session's parquet read confs (`nanosAsLong` and the like change
+    * the inferred types). A rewritten table, or a conf change, yields a
+    * different stamp.
+    */
+  private final case class Stamp(files: Seq[(String, Long, Long)], conf: Map[String, String])
+
+  /** Schema cache keyed on (session, path), like the memo caches. It
+    * holds metadata derived from the inputs, never data or results, so
+    * it is not a memo family: `tools.SweepCaches` leaves it alone.
+    */
+  private val schemas = TrieMap.empty[(SparkSession, String), (Stamp, StructType)]
+
+  private def listing(fs: FileSystem, p: Path): Seq[(String, Long, Long)] =
+    fs.listStatus(p).toSeq.sortBy(_.getPath.toString).flatMap { st =>
+      val own = (st.getPath.toString, st.getLen, st.getModificationTime)
+      if (st.isDirectory) own +: listing(fs, st.getPath) else Seq(own)
+    }
+
+  /** The schema `spark.read.parquet(path)` infers, inferred only when
+    * the path's stamp differs from the cached one. The stamp is a
+    * driver-side Hadoop listing and starts no job. None when the path
+    * cannot be listed, so the caller's read raises Spark's own error.
+    */
+  private[graft] def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new Path(path)
+    val files =
+      try Some(listing(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p))
+      catch { case _: java.io.IOException => None }
+    files.map { f =>
+      val stamp = Stamp(f, spark.conf.getAll.filter(_._1.contains(".parquet.")))
+      schemas.get((spark, path)) match {
+        case Some((cached, schema)) if cached == stamp => schema
+        case _ =>
+          val schema = spark.read.parquet(path).schema
+          schemas.put((spark, path), (stamp, schema))
+          schema
+      }
+    }
+  }
+
+  private def read(spark: SparkSession, path: String): DataFrame =
+    schemaOf(spark, path).fold(spark.read)(spark.read.schema(_)).parquet(path)
 }
 
 /** Line/CSV ingestion with the reference's quirks (FIXTURES.md):

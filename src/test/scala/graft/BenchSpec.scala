@@ -33,4 +33,19 @@ class BenchSpec extends AnyFunSuite {
     // CPU accounting unavailable (-1): conservative, no subtraction
     assert(Bench.ambientEstimate(3.0, -1L, nsPerSec) == 3.0)
   }
+
+  test("a run that throws gives no time sample and lists its query as failed") {
+    assert(Bench.timed(()).exists(_ >= 0.0))
+    val boom = new RuntimeException("injected")
+    assert(Bench.timed(throw boom) == Left(boom))
+    val runs: Seq[Map[String, Either[Throwable, Double]]] = Seq(
+      Map("a" -> Right(0.5), "b" -> Left(boom), "c" -> Left(boom)),
+      Map("a" -> Right(0.4), "b" -> Left(boom), "c" -> Right(0.2)))
+    val (best, failed) = Bench.summarize(Seq("c", "a", "b"), runs)
+    // c's fast-failing run is not its best time; b never succeeded
+    assert(best == Seq("c" -> Some(0.2), "a" -> Some(0.4), "b" -> None))
+    assert(failed == Seq("c", "b"))
+    // compact qv: name order, milliseconds, -1 for no successful run
+    assert(Bench.compactQv(best) == Seq(400L, -1L, 200L))
+  }
 }

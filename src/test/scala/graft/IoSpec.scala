@@ -12,6 +12,54 @@ class IoSpec extends SparkSuite {
     spark.sparkContext.setLogLevel("WARN")
     Tables(spark, "/root/testdata/sf0.001")
   }
+  private def dataDir = t.dir
+
+  test("cached table schemas equal the inferred ones, events.ts under nanosAsLong") {
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val names = new java.io.File(dataDir).list().filter(_.endsWith(".parquet")).sorted
+    assert(names.length == 10, names.mkString(", "))
+    for (name <- names) {
+      val path = s"$dataDir/$name"
+      Tables.schemaOf(spark, path) // the second lookup is served from the cache
+      assert(Tables.schemaOf(spark, path).contains(spark.read.parquet(path).schema), name)
+    }
+  }
+
+  test("a second read of a table starts no Spark job") {
+    // the counter sees the inference job of a schema-less read ...
+    assert(jobsStarted(spark.read.parquet(s"$dataDir/lineitem.parquet")) >= 1)
+    Tables(spark, dataDir).lineitem
+    // ... and none once the session has resolved the table's schema
+    assert(jobsStarted(Tables(spark, dataDir).lineitem) == 0)
+  }
+
+  test("a table rewritten with a different schema reads with the new one") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    val path = s"$dir/nation.parquet"
+    spark.range(3).toDF("a").write.parquet(path)
+    assert(Tables(spark, dir).nation.columns.toSeq == Seq("a"))
+    spark.range(3).select(col("id").cast("string").as("b"), (col("id") * 2).as("c"))
+      .write.mode("overwrite").parquet(path)
+    val back = Tables(spark, dir).nation
+    assert(back.schema == spark.read.parquet(path).schema)
+    assert(back.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
+      Set(("0", 0L), ("1", 2L), ("2", 4L)))
+  }
+
+  test("a parquet read conf set on the session re-resolves the schema") {
+    // events.ts is TIMESTAMP(MICROS, NTZ) written without Spark's schema
+    // metadata, so its inferred type follows inferTimestampNTZ
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+    val path = s"$dataDir/events.parquet"
+    def ts(s: org.apache.spark.sql.SparkSession) = Tables.schemaOf(s, path).map(_("ts").dataType)
+    val s = spark.newSession()
+    assume(ts(s).contains(TimestampNTZType), "events.ts is not TIMESTAMP(MICROS, NTZ) here")
+    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    assert(ts(s).contains(TimestampType))
+    assert(ts(s) == Some(s.read.parquet(path).schema("ts").dataType))
+    // the entry is per session: the suite's session keeps its own schema
+    assert(ts(spark).contains(TimestampNTZType))
+  }
 
   test("events.ts normalizes to TIMESTAMP from both observed encodings") {
     // The driver has shipped events.parquet as TIMESTAMP(NANOS) (read

@@ -390,4 +390,17 @@ class ScaleSpec extends SparkSuite {
     assert(cores.map(c => saltsFor(1000000, 10, c)) ==
       cores.map(c => saltsFor(1000000, 10, c)).sorted)
   }
+
+  test("dispatch budget: rebuilding a short relational query starts no Spark job") {
+    // A parquet read with no schema starts an inference job (five per
+    // q9 build). Tables resolves each schema once per session, so a
+    // second build of these queries is planning only.
+    val queries = Seq("q2_regex_filter", "q3_equi_join", "mj_word_count", "q9_star_join",
+      "q27_approx_distinct", "asof_join", "agg_typed_sum", "stream_hourly_counts")
+    for (q <- queries) {
+      val build = SparkEntry.queries(q)
+      build(spark, dataDir)
+      assert(jobsStarted(build(spark, dataDir)) == 0, s"$q started jobs while building")
+    }
+  }
 }

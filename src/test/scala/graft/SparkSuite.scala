@@ -19,6 +19,31 @@ trait SparkSuite extends AnyFunSuite {
 
   def withLogLevel[A](f: => A): A = { spark.sparkContext.setLogLevel("WARN"); f }
 
+  /** Spark jobs that `f` starts, counted with a SparkListener. Only jobs
+    * carrying this call's thread-local tag count, so a job another
+    * suite left running cannot leak into the number.
+    */
+  def jobsStarted(f: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "graft.test.jobCount"
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag) n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try f
+    finally {
+      sc.setLocalProperty(key, null)
+      org.apache.spark.graft.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
   /** Writes rows as a parquet "documents"-style table into a temp dir
     * and returns a Tables bound to it.
     */

@@ -6,7 +6,9 @@ Usage: python3 tools/benchdiff.py [bench_out.json] [--baseline BASELINE.md]
 Parses the "Per-query best-of floor" table in BASELINE.md (plus the
 round-9 addenda queries recorded only in prose), prints per-query
 ratios bench/floor sorted worst-first, and flags ratios > 2x. Exits 1
-if any query exceeds 2x, so it can gate a round.
+if any query exceeds 2x, so it can gate a round. Queries in the bench
+line's "failed" list (a run that threw gives graft.Bench no time
+sample) print as FAILED and also exit 1.
 
 Adjudication hint: graft.Bench (round 10+) embeds 1/5/15-min load
 averages. Three ambient-load signals feed the verdict (any one fires):
@@ -99,6 +101,9 @@ def main():
         return 2
 
     queries = bench["queries"]
+    failed = bench.get("failed", [])
+    for name in failed:
+        print(f"{name:34s} FAILED (a timed run threw; see the bench's stderr)")
     rows, missing = [], []
     for name, sec in queries.items():
         if name in floor:
@@ -250,7 +255,9 @@ def main():
               f"in this bench line): {', '.join(flagged)}")
     else:
         print("\nVERDICT: all queries within 2x of the recorded floor.")
-    return 1 if flagged else 0
+    if failed:
+        print(f"FAILED: {len(failed)} queries threw in a timed run: {', '.join(failed)}")
+    return 1 if flagged or failed else 0
 
 
 if __name__ == "__main__":
